@@ -17,8 +17,8 @@ docstring).
 Salting contract: any stage whose keep/assign decision stacks on the
 same key as another stage in a composed chain MUST pass a
 stage-unique ``salt``. An unsalted call is reserved for a stage whose
-exact formula an external oracle pins (e.g. temperature sampling's
-registry twin).
+exact formula an external oracle pins (e.g. temperature sampling,
+operators.mixture.temperature_keep).
 """
 
 from __future__ import annotations

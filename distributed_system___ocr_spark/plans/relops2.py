@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
+from ..operators.tokens import WS_TOKENS
 from .queries import _t, register
 
 
@@ -478,8 +479,7 @@ def unpivot_doc_metrics(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "cast(n_chars as long) as n_chars",
-        "cast(size(filter(split(text, ' '), x -> x <> '')) as long)"
-        " as n_tokens",
+        f"cast(size({WS_TOKENS}) as long) as n_tokens",
     )
     return d.selectExpr(
         "doc_id",

@@ -27,19 +27,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.tokens import WS_TOKENS
 from .queries import _t, register
 
-# tokenization shared by all text ops (documents.text is space-joined)
-_SPARK_TOKENS = "filter(split(text, ' '), x -> x <> '')"
+# oracle-side tokenization (documents.text is space-joined); the Spark
+# side is operators.tokens.WS_TOKENS
 _DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 # trigram shingles over the token array (guard: <3 tokens -> empty)
 _SPARK_TRIGRAMS = f"""
-CASE WHEN size({_SPARK_TOKENS}) >= 3 THEN
-  transform(sequence(1, size({_SPARK_TOKENS}) - 2),
-            i -> concat(element_at({_SPARK_TOKENS}, i), ' ',
-                        element_at({_SPARK_TOKENS}, i + 1), ' ',
-                        element_at({_SPARK_TOKENS}, i + 2)))
+CASE WHEN size({WS_TOKENS}) >= 3 THEN
+  transform(sequence(1, size({WS_TOKENS}) - 2),
+            i -> concat(element_at({WS_TOKENS}, i), ' ',
+                        element_at({WS_TOKENS}, i + 1), ' ',
+                        element_at({WS_TOKENS}, i + 2)))
 ELSE array() END
 """
 _DUCK_TRIGRAMS = f"""
@@ -67,7 +68,7 @@ def _staged_trigram_docs(spark, sf_dir):
     toks = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _PAIR_LIMIT)
-        .select("doc_id", F.expr(_SPARK_TOKENS).alias("t"))
+        .select("doc_id", F.expr(WS_TOKENS).alias("t"))
     )
     tri = F.expr(
         """
@@ -321,7 +322,7 @@ def simhash_buckets(spark, sf_dir):
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(F.expr(_SPARK_TOKENS))
+                F.array_distinct(F.expr(WS_TOKENS))
             ).alias("w"),
         )
     )
@@ -387,7 +388,7 @@ def _duck_lex(name):
 )
 def lang_id_lexicon(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.expr(_SPARK_TOKENS))
+    toks = F.array_distinct(F.expr(WS_TOKENS))
 
     def score(name):
         lex = F.array(*[F.lit(w) for w in _LEXICONS[name]])
@@ -432,7 +433,7 @@ def lang_id_lexicon(spark, sf_dir):
 )
 def quality_score(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    toks = F.expr(_SPARK_TOKENS)
+    toks = F.expr(WS_TOKENS)
     nt = F.size(toks).cast("long")
     nd = F.size(F.array_distinct(toks)).cast("long")
     dr = nd.cast("double") / nt
@@ -554,7 +555,7 @@ _TOKEN_REGEX = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 )
 def token_stats_regex(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    ws = F.size(F.expr(_SPARK_TOKENS)).cast("long")
+    ws = F.size(F.expr(WS_TOKENS)).cast("long")
     bpe = F.size(
         F.regexp_extract_all(F.lower("text"), F.lit(_TOKEN_REGEX), 0)
     ).cast("long")
@@ -663,7 +664,7 @@ def dedup_simhash_hamming1(spark, sf_dir):
         .filter(F.col("doc_id") < _PAIR_LIMIT)
         .select(
             "doc_id",
-            F.explode(F.array_distinct(F.expr(_SPARK_TOKENS))).alias("w"),
+            F.explode(F.array_distinct(F.expr(WS_TOKENS))).alias("w"),
         )
     )
     hashed = words.withColumn(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.bucket import salted_bucket
+from ..operators.tokens import WS_TOKENS
 from .queries import _t, register
 
 # hash bucket in [0, mod): same md5-hex arithmetic both engines —
@@ -158,14 +159,6 @@ CASE WHEN len({_DUCK_TOKENS2}) >= 2 THEN
                  i -> {_DUCK_TOKENS2}[i] || ' ' || {_DUCK_TOKENS2}[i+1])
 ELSE [] END
 """
-_SPARK_TOKENS2 = "filter(split(text, ' '), x -> x <> '')"
-_SPARK_BIGRAMS = f"""
-CASE WHEN size({_SPARK_TOKENS2}) >= 2 THEN
-  transform(sequence(1, size({_SPARK_TOKENS2}) - 1),
-            i -> concat(element_at({_SPARK_TOKENS2}, i), ' ',
-                        element_at({_SPARK_TOKENS2}, i + 1)))
-ELSE array() END
-"""
 
 
 @register(
@@ -213,7 +206,7 @@ def gopher_quality_filters(spark, sf_dir):
     # stage 1: tokens, once (the filter below re-derives size(toks)
     # at the scan via predicate pushdown — one cheap extra split in the
     # filter, instead of shipping all rows to a post-project filter)
-    s1 = d.select("doc_id", "text", F.expr(_SPARK_TOKENS2).alias("toks"))
+    s1 = d.select("doc_id", "text", F.expr(WS_TOKENS).alias("toks"))
     s1 = s1.filter(F.size("toks") >= 2)
     # stage 2: bigrams from the materialized toks column (size >= 2 is
     # guaranteed, so no CASE guard; zip_with over two slices is one

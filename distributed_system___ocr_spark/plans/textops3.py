@@ -17,7 +17,10 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.mixture import split_label
+from ..operators.tokens import WS_TOKENS, ngrams
 from .queries import _t, register
+from .textops2 import _duck_bucket
 
 # --------------------------------------------------------------------------
 # Unicode NFC normalization
@@ -460,7 +463,6 @@ def dedup_keep_representative(spark, sf_dir):
 
 _DECON_N = 5  # overlap gram width
 _DUCK_TOKS_DECON = "list_filter(string_split(text, ' '), x -> x <> '')"
-_SPARK_TOKS_DECON = "filter(split(text, ' '), x -> x <> '')"
 
 
 @register(
@@ -494,17 +496,15 @@ def decontaminate_ngram_overlap(spark, sf_dir):
     enough); the eval-gram side is a bounded benchmark vocabulary at
     any corpus size, so AQE broadcasts it and the expensive side never
     re-shuffles; per-doc aggregation is partial+final. Token arrays
-    are staged once per row (the gopher lesson)."""
+    are staged once per row (the gopher lesson); the n-grams are
+    operators.tokens.ngrams, the definition the curation chain's
+    decontamination stage (which drops docs against an EXTERNAL eval
+    set) also uses."""
     d = _t(spark, sf_dir, "documents")
     s1 = d.select(
-        "doc_id", F.expr(f"{_SPARK_TOKS_DECON}").alias("t")
+        "doc_id", F.expr(WS_TOKENS).alias("t")
     ).filter(F.size("t") >= _DECON_N)
-    gram = F.expr(
-        "transform(sequence(1, size(t) - 4), i -> concat_ws(' ', "
-        "element_at(t, i), element_at(t, i+1), element_at(t, i+2), "
-        "element_at(t, i+3), element_at(t, i+4)))"
-    )
-    grams = s1.select("doc_id", F.explode(gram).alias("g"))
+    grams = s1.select("doc_id", F.explode(ngrams(_DECON_N)).alias("g"))
     eval_g = (
         grams.filter(F.col("doc_id") % 50 == 0)
         .select("g").distinct()
@@ -537,6 +537,7 @@ def decontaminate_ngram_overlap(spark, sf_dir):
 
 _PACK_SPLIT_TRAIN = 800_000  # of 1M md5 buckets -> 80% train
 _PACK_SPLIT_VAL = 900_000    # next 10% val; rest test
+_DUCK_SPLIT_BUCKET = _duck_bucket(1_000_000, "split:")
 
 
 @register(
@@ -544,8 +545,8 @@ _PACK_SPLIT_VAL = 900_000    # next 10% val; rest test
     f"""
     WITH s AS (
       SELECT lang, doc_id, n_chars,
-             CASE WHEN {{bucket}} < {_PACK_SPLIT_TRAIN} THEN 'train'
-                  WHEN {{bucket}} < {_PACK_SPLIT_VAL} THEN 'val'
+             CASE WHEN {_DUCK_SPLIT_BUCKET} < {_PACK_SPLIT_TRAIN} THEN 'train'
+                  WHEN {_DUCK_SPLIT_BUCKET} < {_PACK_SPLIT_VAL} THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     )
@@ -562,19 +563,13 @@ def pack_docs_greedy_split(spark, sf_dir):
     within every (lang, split) sub-partition), composite partition
     key via greedy_pack_bins(part_col=["lang", "split"])."""
     from ..operators.packing import N_PACK_BUCKETS, greedy_pack_bins
-    from .textops2 import _spark_bucket
 
-    # same "split:"-salted bucket as train_val_test_split, so both
-    # queries agree on every doc's split (and the stamp stays
-    # independent of sampling-stage acceptance buckets)
-    split = (
-        F.when(_spark_bucket(1_000_000, "split:") < _PACK_SPLIT_TRAIN,
-               "train")
-        .when(_spark_bucket(1_000_000, "split:") < _PACK_SPLIT_VAL, "val")
-        .otherwise("test")
-    )
+    # the split_label stamp train_val_test_split applies, so both
+    # queries agree on every doc's split
     d = _t(spark, sf_dir, "documents").select(
-        "lang", "doc_id", "n_chars", split.alias("split")
+        "lang", "doc_id", "n_chars",
+        split_label("doc_id", _PACK_SPLIT_TRAIN, _PACK_SPLIT_VAL)
+        .alias("split"),
     )
     stats = d.groupBy("lang").agg(
         F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx")
@@ -595,19 +590,6 @@ def pack_docs_greedy_split(spark, sf_dir):
         bucketed, _PACK_TARGET, "_bkt", ["doc_id"],
         part_col=["lang", "split"],
     ).select("lang", "split", "doc_id", "n_chars", "bin_id")
-
-
-def _pack_split_patch_sql() -> None:
-    from .queries import REGISTRY
-    from .textops2 import _duck_bucket
-
-    REGISTRY["pack_docs_greedy_split"]["sql"] = (
-        REGISTRY["pack_docs_greedy_split"]["sql"]
-        .replace("{bucket}", _duck_bucket(1_000_000, "split:"))
-    )
-
-
-_pack_split_patch_sql()
 
 
 # --------------------------------------------------------------------------
@@ -668,9 +650,9 @@ def url_host_blocklist(spark, sf_dir):
 # --------------------------------------------------------------------------
 # cross-split n-gram leakage audit (round 6)
 # --------------------------------------------------------------------------
-# The eval-integrity twin of decontaminate_ngram_overlap: there the
-# eval corpus is EXTERNAL (a benchmark suite, bounded, broadcast);
-# here the val/test splits of the corpus ITSELF are audited against
+# The eval-integrity counterpart of decontaminate_ngram_overlap:
+# there the eval set is a bounded benchmark slice (broadcast); here
+# the val/test splits of the corpus ITSELF are audited against
 # the train split — the check a training run performs before trusting
 # its held-out numbers, since a hash split is growth-stable but not
 # content-aware (near-duplicate docs can straddle the boundary).
@@ -688,8 +670,8 @@ def url_host_blocklist(spark, sf_dir):
     f"""
     WITH toks AS (
       SELECT doc_id,
-             CASE WHEN {{bucket}} < {_PACK_SPLIT_TRAIN} THEN 'train'
-                  WHEN {{bucket}} < {_PACK_SPLIT_VAL} THEN 'val'
+             CASE WHEN {_DUCK_SPLIT_BUCKET} < {_PACK_SPLIT_TRAIN} THEN 'train'
+                  WHEN {_DUCK_SPLIT_BUCKET} < {_PACK_SPLIT_VAL} THEN 'val'
                   ELSE 'test' END AS split,
              {_DUCK_TOKS_DECON} AS t
       FROM documents
@@ -717,26 +699,15 @@ def url_host_blocklist(spark, sf_dir):
 )
 def split_leakage_ngram(spark, sf_dir):
     """Per val/test doc: how many of its distinct 5-grams appear in
-    ANY train-split doc ("split:"-salted bucket, identical to
-    train_val_test_split, so the stamp agrees across queries)."""
-    from .textops2 import _spark_bucket
-
-    b = _spark_bucket(1_000_000, "split:")
-    split = (
-        F.when(b < _PACK_SPLIT_TRAIN, "train")
-        .when(b < _PACK_SPLIT_VAL, "val")
-        .otherwise("test")
-    )
+    ANY train-split doc (the split_label stamp train_val_test_split
+    applies, so the stamp agrees across queries)."""
     d = _t(spark, sf_dir, "documents").select(
-        "doc_id", split.alias("split"),
-        F.expr(_SPARK_TOKS_DECON).alias("t"),
+        "doc_id",
+        split_label("doc_id", _PACK_SPLIT_TRAIN, _PACK_SPLIT_VAL)
+        .alias("split"),
+        F.expr(WS_TOKENS).alias("t"),
     ).filter(F.size("t") >= _DECON_N)
-    gram = F.expr(
-        "transform(sequence(1, size(t) - 4), i -> concat_ws(' ', "
-        "element_at(t, i), element_at(t, i+1), element_at(t, i+2), "
-        "element_at(t, i+3), element_at(t, i+4)))"
-    )
-    grams = d.select("doc_id", "split", F.explode(gram).alias("g"))
+    grams = d.select("doc_id", "split", F.explode(ngrams(_DECON_N)).alias("g"))
     # round-7: annotate "appears in ANY train doc" with one window max
     # over the gram partition instead of a distinct + join back — the
     # corpus-sized tokenize+gram explode executes ONCE, not twice
@@ -760,16 +731,3 @@ def split_leakage_ngram(spark, sf_dir):
         F.round(overlap / F.countDistinct("g"), 6).alias("overlap_frac"),
         (overlap > 0).alias("is_leaked"),
     )
-
-
-def _split_leakage_patch_sql() -> None:
-    from .queries import REGISTRY
-    from .textops2 import _duck_bucket
-
-    REGISTRY["split_leakage_ngram"]["sql"] = (
-        REGISTRY["split_leakage_ngram"]["sql"]
-        .replace("{bucket}", _duck_bucket(1_000_000, "split:"))
-    )
-
-
-_split_leakage_patch_sql()

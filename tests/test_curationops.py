@@ -465,11 +465,22 @@ def test_unigram_model_queries_explode_tokens_once(spark):
     model totals now derive from the vocab-sized tf frame and the
     per-doc score weights logp by the staged term count (value
     equality is the DuckDB oracle's job; this pins the plan shape)."""
+    from distributed_system___ocr_spark.curation import lm_quality_survivors
     from distributed_system___ocr_spark.plans.curationops import (
         dsir_importance_weight,
         lm_quality_zbuckets,
         unigram_logprob_score,
     )
+
+    def lm_quality_survivors_by_url(spark, sf):
+        # the curation chain's caller of the same kernel, over a
+        # url-keyed frame of the same documents
+        docs = spark.read.parquet(f"{sf}/documents.parquet").select(
+            F.concat(F.lit("https://ex.com/d"), F.col("doc_id").cast("string"))
+            .alias("url"),
+            "text", "lang",
+        )
+        return lm_quality_survivors(docs, 0.5)
 
     # static bounds: Catalyst COPIES (not shares) a subtree with two
     # consumers, so the frame feeding both the model and the score
@@ -481,6 +492,7 @@ def test_unigram_model_queries_explode_tokens_once(spark):
     for q, max_static in (
         (unigram_logprob_score, 2),
         (lm_quality_zbuckets, 4),
+        (lm_quality_survivors_by_url, 4),
         (dsir_importance_weight, 3),
     ):
         df = q(spark, SF)
