@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -59,7 +60,12 @@ from .functions.minhash import BAND_SIZE, N_HASHES, TOKEN_HASH_VERSION
 from .operators.components import _free_ckpt, connected_components
 from .operators.neardup import minhash_lsh_pairs_scale
 from .operators.packing import greedy_pack_bins, monotone_hash_bucket
-from .operators.resume import _atomic_write
+from .operators.resume import (
+    _atomic_write,
+    _ckpt,
+    load_snapshot,
+    publish_snapshot,
+)
 from .operators.urlcanon import URL_CANON_VERSION, canonicalize_docs
 from .operators.diversify import CLUSTER_BALANCE_VERSION
 from .operators.mixture import group_top_k, split_label, temperature_keep
@@ -68,8 +74,6 @@ from .operators.semdedup import SEMDEDUP_EMBED_VERSION
 from .operators.spans import keep_first_segments, span_coverage
 from .operators.tokens import WS_TOKENS, ngrams
 from .operators.urlfilter import URL_FILTER_VERSION, filter_blocked_domains
-
-_CKPT = "_checkpoint"
 
 # Version of the curation DATAFLOW itself: bump whenever any stage's
 # algorithm changes its output for the same input + config, so a code
@@ -91,18 +95,16 @@ _CKPT = "_checkpoint"
 CURATION_DATAFLOW_VERSION = 5
 
 
-def _ckpt(out_dir: str) -> str:
-    return os.path.join(out_dir, _CKPT)
+# the curation snapshot log IS the extraction one (operators/resume.py)
+load_curation_snapshot = load_snapshot
 
-
-def load_curation_snapshot(out_dir: str) -> dict | None:
-    latest = os.path.join(_ckpt(out_dir), "LATEST")
-    if not os.path.exists(latest):
-        return None
-    with open(latest) as f:
-        name = f.read().strip()
-    with open(os.path.join(_ckpt(out_dir), name)) as f:
-        return json.load(f)
+# increment-unsafe stage knobs of run_curation: their statistics are
+# properties of the whole corpus (span/tile frequencies, embedding
+# cells, per-lang quality stats, language/cell shares)
+CORPUS_GLOBAL_STAGES = (
+    "remove_spans_min_docs", "segment_dedup_n", "semdedup_tau",
+    "lm_quality_drop_z", "cluster_alpha", "sample_alpha",
+)
 
 
 def _committed_run_history(out_dir: str, n: int) -> list[str]:
@@ -119,16 +121,77 @@ def _committed_run_history(out_dir: str, n: int) -> list[str]:
     hist: list[str] = []
     for i in range(n + 1):
         try:
-            with open(
-                os.path.join(_ckpt(out_dir), f"snapshot-{i}.json")
-            ) as f:
-                s = json.load(f)
+            s = load_snapshot(out_dir, i)
             lr = s.get("latest_run", s["runs"][-1])
         except (OSError, ValueError, KeyError, IndexError):
             continue
         if lr not in hist:
             hist.append(lr)
     return hist
+
+
+def _replayed(snap: dict | None, run_id: str) -> bool:
+    """The replay guard: ``run_id`` is committed, or was and has been
+    vacuumed — vacuumed ids stay guarded: their data is gone but
+    reusing the id would make old lineage/export paths ambiguous."""
+    return bool(snap) and (
+        run_id in snap["runs"] or run_id in snap.get("vacuumed_runs", [])
+    )
+
+
+def _run_chain(snap: dict, run_id: str) -> list[str]:
+    """run_id plus its incremental ancestors, newest first: walk the
+    snapshot's ``run_parents`` map (runs committed before incremental
+    mode existed have no entry — chain of one)."""
+    rp = snap.get("run_parents", {})
+    chain: list[str] = []
+    cur: str | None = run_id
+    while cur is not None and cur not in chain:
+        chain.append(cur)
+        cur = rp.get(cur)
+    return chain
+
+
+def _committed_chain(
+    out_dir: str, run_id: str | None = None
+) -> tuple[dict, list[str]]:
+    """The latest committed snapshot and the chain (newest first) of
+    ``run_id`` — by default the head, ``latest_run``."""
+    snap = load_curation_snapshot(out_dir)
+    if not snap:
+        raise FileNotFoundError(f"no committed curation under {out_dir}")
+    if run_id is None:
+        run_id = snap.get("latest_run", snap["runs"][-1])
+    elif run_id not in snap["runs"]:
+        raise FileNotFoundError(
+            f"run_id {run_id!r} is not committed in {out_dir} "
+            f"(committed: {snap['runs']})"
+        )
+    return snap, _run_chain(snap, run_id)
+
+
+def _publish_run(
+    out_dir: str, prev: dict | None, run_id: str, parent: str | None,
+    fingerprint: dict | None,
+) -> dict:
+    """Commit ``run_id`` as the new head on top of ``prev``: the atomic
+    snapshot publish of every curation run and compaction."""
+    snap = {
+        "n": (prev["n"] + 1) if prev else 0,
+        "runs": sorted((set(prev["runs"]) if prev else set()) | {run_id}),
+        "input_fingerprint": fingerprint,
+        "latest_run": run_id,
+        # which run each committed run extended (None for full runs
+        # and compactions): drives cumulative reads and vacuum's
+        # ancestor-retention closure
+        "run_parents": {
+            **(prev.get("run_parents", {}) if prev else {}),
+            run_id: parent,
+        },
+    }
+    if prev and prev.get("vacuumed_runs"):
+        snap["vacuumed_runs"] = prev["vacuumed_runs"]
+    return publish_snapshot(out_dir, snap)
 
 
 _INFLIGHT_PREFIX = "INFLIGHT-"
@@ -140,6 +203,29 @@ _INFLIGHT_STALE_SEC = 6 * 3600
 
 def _inflight_path(out_dir: str, run_id: str) -> str:
     return os.path.join(_ckpt(out_dir), f"{_INFLIGHT_PREFIX}{run_id}")
+
+
+@contextmanager
+def _inflight(out_dir: str, run_id: str):
+    """Hold the in-flight sentinel of ``run_id`` (round-6 advice): a
+    concurrent vacuum/compaction fails loudly instead of sweeping this
+    run's staging dirs as debris. Removed on EVERY exit, so only a
+    hard process kill leaves one (and those go stale — see
+    _live_inflight_runs)."""
+    os.makedirs(_ckpt(out_dir), exist_ok=True)
+    sentinel = _inflight_path(out_dir, run_id)
+    with open(sentinel, "w") as f:
+        # pid + kernel start time: recycling-proof liveness identity
+        st = _pid_start(os.getpid())
+        f.write(f"{os.getpid()}:{st}" if st is not None
+                else str(os.getpid()))
+    try:
+        yield
+    finally:
+        try:
+            os.remove(sentinel)
+        except OSError:
+            pass
 
 
 def _pid_start(pid: int) -> int | None:
@@ -245,9 +331,7 @@ def vacuum_curation(out_dir: str, keep_last: int = 1) -> dict:
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
+    snap, _ = _committed_chain(out_dir)
     live = _live_inflight_runs(out_dir)
     if live:
         raise RuntimeError(
@@ -286,9 +370,8 @@ def vacuum_curation(out_dir: str, keep_last: int = 1) -> dict:
                 to_remove.append(f"{sub}/{entry}")
     to_remove.sort()
 
-    n = snap["n"] + 1
-    new_snap = {
-        "n": n,
+    new_snap = publish_snapshot(out_dir, {
+        "n": snap["n"] + 1,
         "runs": sorted(keep),
         "vacuumed_runs": sorted(
             set(snap.get("vacuumed_runs", [])) | set(drop)
@@ -299,10 +382,7 @@ def vacuum_curation(out_dir: str, keep_last: int = 1) -> dict:
         # pruned to kept runs (ancestors of kept runs are themselves
         # kept by the closure above)
         "run_parents": {r: p for r, p in rp.items() if r in keep},
-    }
-    name = f"snapshot-{n}.json"
-    _atomic_write(os.path.join(_ckpt(out_dir), name), json.dumps(new_snap))
-    _atomic_write(os.path.join(_ckpt(out_dir), "LATEST"), name)
+    })
 
     # data deletion AFTER the commit, exactly the committed list
     for rel in to_remove:
@@ -601,29 +681,36 @@ def _write_survivor_bands(survivors: DataFrame, run_dir: str) -> None:
     )
 
 
-def _chain_hashes(
-    spark: SparkSession, out_dir: str, chain: list[str]
-) -> DataFrame:
-    """(content_hash) rows of every committed survivor in the chain:
-    stored hash manifests where present, recomputed from survivor
-    text otherwise (md5 has no version knob — only presence is
-    checked)."""
-    parts = []
-    for rid in chain:
-        p = os.path.join(out_dir, "curated", f"run_id={rid}", "hashes")
-        parts.append(
-            spark.read.parquet(p).select("content_hash")
-            if os.path.isdir(p)
-            else spark.read.parquet(
-                _survivors_path(out_dir, rid)
-            ).select(
-                F.md5(F.col("text").cast("binary")).alias("content_hash")
-            )
+def _run_path(out_dir: str, run_id: str, *parts: str) -> str:
+    return os.path.join(out_dir, "curated", f"run_id={run_id}", *parts)
+
+
+def _union_runs(runs: list[str], read_run) -> DataFrame:
+    """``read_run(rid)`` for every run, unioned by name in the given
+    order (missing columns as NULL: a split-stamped run unions cleanly
+    over a splitless one; a no-op on equal schemas)."""
+    out = None
+    for rid in runs:
+        df = read_run(rid)
+        out = df if out is None else out.unionByName(
+            df, allowMissingColumns=True
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+    return out
+
+
+def _stored_or_survivors(spark: SparkSession, out_dir: str, sub: str,
+                         from_survivors, reusable=os.path.isdir):
+    """Per-run reader of the stored artifact ``sub``, or — where it is
+    absent (runs committed before it existed) or not ``reusable`` —
+    ``from_survivors`` applied to the run's survivor rows."""
+    def read(rid: str) -> DataFrame:
+        p = _run_path(out_dir, rid, sub)
+        if reusable(p):
+            return spark.read.parquet(p)
+        return from_survivors(
+            spark.read.parquet(_run_path(out_dir, rid, "survivors"))
+        )
+    return read
 
 
 def _chain_bands(
@@ -635,31 +722,50 @@ def _chain_bands(
     or across a minhash version bump)."""
     from .operators.neardup import minhash_bands
 
-    parts = []
-    for rid in chain:
-        run_dir = os.path.join(out_dir, "curated", f"run_id={rid}")
-        meta_path = os.path.join(run_dir, _BANDS_META)
-        bands_path = os.path.join(run_dir, "bands")
-        reusable = False
-        if os.path.isdir(bands_path) and os.path.exists(meta_path):
-            try:
-                with open(meta_path) as f:
-                    reusable = json.load(f) == _band_meta()
-            except (OSError, ValueError):
-                reusable = False
-        parts.append(
-            spark.read.parquet(bands_path) if reusable
-            else minhash_bands(
-                spark.read.parquet(
-                    _survivors_path(out_dir, rid)
-                ).select("url", "text"),
-                id_col="url", text_col="text",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    def reusable(bands_path: str) -> bool:
+        meta_path = os.path.join(os.path.dirname(bands_path), _BANDS_META)
+        if not (os.path.isdir(bands_path) and os.path.exists(meta_path)):
+            return False
+        try:
+            with open(meta_path) as f:
+                return json.load(f) == _band_meta()
+        except (OSError, ValueError):
+            return False
+
+    return _union_runs(chain, _stored_or_survivors(
+        spark, out_dir, "bands",
+        lambda surv: minhash_bands(
+            surv.select("url", "text"), id_col="url", text_col="text"
+        ),
+        reusable,
+    ))
+
+
+def _chain_url_hashes(
+    spark: SparkSession, out_dir: str, chain: list[str]
+) -> DataFrame:
+    """(url, content_hash) of every committed survivor in the chain:
+    stored per-run hash manifests where present, recomputed from
+    survivor text otherwise (md5 has no version knob — only presence
+    is checked)."""
+    return _union_runs(chain, _stored_or_survivors(
+        spark, out_dir, "hashes",
+        lambda surv: surv.select(
+            "url", F.md5(F.col("text").cast("binary")).alias("content_hash")
+        ),
+    ))
+
+
+def _chain_processed(
+    spark: SparkSession, out_dir: str, chain: list[str]
+) -> DataFrame:
+    """Every url EVALUATED by the chain (processed manifests; runs
+    committed before the manifest existed fall back to their survivor
+    urls — a url those runs dropped would be re-evaluated, and dedup
+    against the chain re-drops it)."""
+    return _union_runs(chain, _stored_or_survivors(
+        spark, out_dir, "processed", lambda surv: surv.select("url"),
+    )).distinct()
 
 
 def exact_dedup_survivors_incremental(
@@ -673,7 +779,7 @@ def exact_dedup_survivors_incremental(
     and any new doc whose text matches a COMMITTED base survivor
     drops — committed survivors are never revoked. One hash window
     over the new batch + one hash anti-join against the base;
-    ``base_hashes`` (the per-run stored manifests, `_chain_hashes`)
+    ``base_hashes`` (the per-run stored manifests, `_chain_url_hashes`)
     keeps the anti-join off the base TEXT entirely — without it the
     hashes are recomputed from survivor text (one linear pass).
 
@@ -897,6 +1003,31 @@ def pack_chunks_greedy(
     ).drop("_bkt")
 
 
+def _write_packed(
+    spark: SparkSession, packed: DataFrame, packed_path: str,
+    key: list[str], n_survivors: int,
+) -> tuple[int, int]:
+    """Write the packed bins; returns (n_chunks, n_bins) counted from
+    the written files, bins keyed by (``key``, bin_id).
+
+    A split-stamped ``key`` partitions the layout by split: a training
+    reader of split=train then PRUNES the val/test files at the
+    directory level (PartitionFilters in the scan) instead of scanning
+    and filtering 100% of the chunk bytes. Only when there are rows: a
+    zero-survivor run (e.g. a fully-resumed increment) partitionBy-
+    writes ONLY _SUCCESS — no schema file — and every later
+    schema-less read of the committed dir (read_packed, cumulative
+    unions) would throw UNABLE_TO_INFER_SCHEMA; the non-partitioned
+    empty write keeps a schema file, and a split filter on it is a
+    no-op over zero rows."""
+    writer = packed.write.mode("overwrite")
+    if "split" in key and n_survivors > 0:
+        writer = writer.partitionBy("split")
+    writer.parquet(packed_path)
+    back = spark.read.schema(packed.schema).parquet(packed_path)
+    return back.count(), back.select(*key, "bin_id").distinct().count()
+
+
 def _eval_fingerprint(eval_docs: DataFrame) -> dict:
     """Order-independent content identity of a decontamination eval
     corpus (text column only — that is all decontamination reads)."""
@@ -934,6 +1065,12 @@ def _blocklist_fingerprint(blocked: DataFrame) -> dict:
         F.sum(F.xxhash64(F.col("d")).cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     return {"n_domains": row["n"], "content_sum": str(row["h"])}
+
+
+_LINEAGE_SCHEMA = (
+    "run_id string, stage_idx int, stage string, n_in long, "
+    "n_out long, n_dropped long"
+)
 
 
 def run_curation(
@@ -1022,13 +1159,7 @@ def run_curation(
     temperature sample -> split stamp -> chunk -> pack."""
     run_id = run_id or uuid.uuid4().hex[:12]
     prev = load_curation_snapshot(out_dir)
-    committed = set(prev["runs"]) if prev else set()
-    # vacuumed run_ids stay guarded: their data is gone but reusing
-    # the id would make old lineage/export paths ambiguous
-    replay_guard = committed | (
-        set(prev.get("vacuumed_runs", [])) if prev else set()
-    )
-    if run_id in replay_guard:
+    if _replayed(prev, run_id):
         raise ValueError(
             f"run_id {run_id!r} is already committed in {out_dir}; "
             "rerun with a fresh run_id"
@@ -1070,19 +1201,11 @@ def run_curation(
     base = parent_run = processed = None
     if incremental:
         # corpus-global stages compute statistics over the WHOLE
-        # corpus (span/tile frequencies, embedding cells, per-lang
-        # quality stats, language/cell shares): running them over one
-        # batch silently changes their semantics, so they demand a
-        # full re-curate instead
-        for knob, nm in (
-            (remove_spans_min_docs, "remove_spans_min_docs"),
-            (segment_dedup_n, "segment_dedup_n"),
-            (semdedup_tau, "semdedup_tau"),
-            (lm_quality_drop_z, "lm_quality_drop_z"),
-            (cluster_alpha, "cluster_alpha"),
-            (sample_alpha, "sample_alpha"),
-        ):
-            if knob is not None:
+        # corpus: running them over one batch silently changes their
+        # semantics, so they demand a full re-curate instead
+        args = locals()  # the knobs are this function's parameters
+        for nm in CORPUS_GLOBAL_STAGES:
+            if args[nm] is not None:
                 raise ValueError(
                     f"{nm} is a corpus-global stage — its statistics "
                     "are properties of the whole corpus, so it needs "
@@ -1104,26 +1227,10 @@ def run_curation(
         # TEXT at all — resume/cap touch urls, exact dedup touches
         # stored hashes, near-dup touches stored bands
         base_bands = _chain_bands(spark, out_dir, chain)
-        base_hashes = _chain_hashes(spark, out_dir, chain)
-        # every url EVALUATED by the chain (processed manifests; runs
-        # committed before the manifest existed fall back to their
-        # survivor urls — a url those runs dropped would be
-        # re-evaluated, and dedup-vs-base re-drops it)
-        parts = []
-        for rid in chain:
-            p = os.path.join(
-                out_dir, "curated", f"run_id={rid}", "processed"
-            )
-            parts.append(
-                spark.read.parquet(p) if os.path.isdir(p)
-                else spark.read.parquet(
-                    _survivors_path(out_dir, rid)
-                ).select("url")
-            )
-        processed = parts[0]
-        for p in parts[1:]:
-            processed = processed.unionByName(p)
-        processed = processed.distinct()
+        base_hashes = _chain_url_hashes(
+            spark, out_dir, chain
+        ).select("content_hash").distinct()
+        processed = _chain_processed(spark, out_dir, chain)
     # blank rows can't train and would all collide on one content
     # hash; drop them up front, counted in the lineage 'input' stage
     # (raw -> non-blank), mirroring the extraction pipeline's O2
@@ -1221,7 +1328,7 @@ def run_curation(
                                  "lineage_path")},
         }
 
-    run_dir = os.path.join(out_dir, "curated", f"run_id={run_id}")
+    run_dir = _run_path(out_dir, run_id)
     survivors_path = os.path.join(run_dir, "survivors")
     packed_path = os.path.join(run_dir, "packed")
     lineage_path = os.path.join(out_dir, "lineage", f"run_id={run_id}")
@@ -1408,19 +1515,7 @@ def run_curation(
             _free_ckpt(prev)
         return df, n
 
-    # in-flight sentinel (round-6 advice): makes a concurrent vacuum
-    # fail loudly instead of sweeping this run's staging dirs as
-    # debris; removed on EVERY exit, so only a hard process kill
-    # leaves one (and those go stale — see _live_inflight_runs)
-    ck = _ckpt(out_dir)
-    os.makedirs(ck, exist_ok=True)
-    sentinel = _inflight_path(out_dir, run_id)
-    with open(sentinel, "w") as f:
-        # pid + kernel start time: recycling-proof liveness identity
-        _st = _pid_start(os.getpid())
-        f.write(f"{os.getpid()}:{_st}" if _st is not None
-                else str(os.getpid()))
-    try:
+    with _inflight(out_dir, run_id):
         import time as _time
 
         measured: dict[str, int] = {}
@@ -1514,27 +1609,9 @@ def run_curation(
             pack_target,
             part_cols=("lang", *split_extra),
         )
-        # when the split stage is on, partition the packed layout by
-        # split: a training reader of split=train then PRUNES the
-        # val/test files at the directory level (PartitionFilters in
-        # the scan) instead of scanning and filtering 100% of the
-        # chunk bytes — the read-side win the stamp exists for
-        writer = packed.write.mode("overwrite")
-        # partition only when there are rows: a zero-survivor run
-        # (e.g. a fully-resumed increment) partitionBy-writes ONLY
-        # _SUCCESS — no schema file — and every later schema-less
-        # read of the committed dir (read_packed, cumulative unions)
-        # would throw UNABLE_TO_INFER_SCHEMA; the non-partitioned
-        # empty write keeps a schema file, and a split filter on it
-        # is a no-op over zero rows
-        if split_fracs is not None and n_survivors > 0:
-            writer = writer.partitionBy("split")
-        writer.parquet(packed_path)
-        packed_back = spark.read.schema(packed.schema).parquet(packed_path)
-        n_chunks = packed_back.count()
-        n_bins = packed_back.select(
-            "lang", *split_extra, "bin_id"
-        ).distinct().count()
+        n_chunks, n_bins = _write_packed(
+            spark, packed, packed_path, ["lang", *split_extra], n_survivors
+        )
         stage_sec["_chunk_pack"] = round(_time.monotonic() - _t0, 3)
 
         stages = [("input", n_raw, n_input)]  # raw -> non-blank (O2)
@@ -1552,35 +1629,11 @@ def run_curation(
                 (run_id, i, stage, n_in, n_out, n_in - n_out)
                 for i, (stage, n_in, n_out) in enumerate(stages)
             ],
-            "run_id string, stage_idx int, stage string, n_in long, "
-            "n_out long, n_dropped long",
+            _LINEAGE_SCHEMA,
         )
         lineage.write.mode("overwrite").parquet(lineage_path)
 
-        n = (prev["n"] + 1) if prev else 0
-        snap = {
-            "n": n,
-            "runs": sorted(committed | {run_id}),
-            "input_fingerprint": fp,
-            "latest_run": run_id,
-            # which run each committed run extended (None for full
-            # runs): drives cumulative reads and vacuum's
-            # ancestor-retention closure
-            "run_parents": {
-                **(prev.get("run_parents", {}) if prev else {}),
-                run_id: parent_run,
-            },
-        }
-        if prev and prev.get("vacuumed_runs"):
-            snap["vacuumed_runs"] = prev["vacuumed_runs"]
-        name = f"snapshot-{n}.json"
-        _atomic_write(os.path.join(ck, name), json.dumps(snap))
-        _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic commit
-    finally:
-        try:
-            os.remove(sentinel)
-        except OSError:
-            pass
+        snap = _publish_run(out_dir, prev, run_id, parent_run, fp)
 
     return {
         "run_id": run_id,
@@ -1678,29 +1731,24 @@ def read_packed(
     key over a chain is (run_id, lang[, split], bin_id). Requesting a
     ``split`` fails loudly if any chain run was not split-stamped
     (silently dropping a whole run's rows would be worse)."""
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    rid = snap.get("latest_run", snap["runs"][-1])
-    chain = _run_chain(snap, rid) if cumulative else [rid]
-    frames, unstamped = [], []
-    for r in chain:
-        df = spark.read.parquet(
-            os.path.join(out_dir, "curated", f"run_id={r}", "packed")
-        )
-        if cumulative:
-            df = df.withColumn("run_id", F.lit(r))
-        if split is not None and "split" not in df.columns:
-            unstamped.append(r)
-        frames.append(df)
+    _, chain = _committed_chain(out_dir)
+    if not cumulative:
+        chain = chain[:1]
+    frames = {
+        r: spark.read.parquet(_run_path(out_dir, r, "packed"))
+        for r in chain
+    }
+    unstamped = [r for r, df in frames.items() if "split" not in df.columns]
     if split is not None and unstamped:
         raise ValueError(
             f"run(s) {unstamped} were not split-stamped (run with "
             "split_fracs to enable train/val/test reads)"
         )
-    out = frames[0]
-    for df in frames[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
+    out = _union_runs(
+        chain,
+        lambda r: frames[r].withColumn("run_id", F.lit(r))
+        if cumulative else frames[r],
+    )
     if split is not None:
         out = out.filter(F.col("split") == split)
     return out
@@ -1724,25 +1772,6 @@ def export_packed_jsonl(
     return spark.read.schema(packed.schema).json(dest).count()
 
 
-def _run_chain(snap: dict, run_id: str) -> list[str]:
-    """run_id plus its incremental ancestors, newest first: walk the
-    snapshot's ``run_parents`` map (runs committed before incremental
-    mode existed have no entry — chain of one)."""
-    rp = snap.get("run_parents", {})
-    chain: list[str] = []
-    cur: str | None = run_id
-    while cur is not None and cur not in chain:
-        chain.append(cur)
-        cur = rp.get(cur)
-    return chain
-
-
-def _survivors_path(out_dir: str, run_id: str) -> str:
-    return os.path.join(
-        out_dir, "curated", f"run_id={run_id}", "survivors"
-    )
-
-
 def read_curated(
     spark: SparkSession,
     out_dir: str,
@@ -1759,25 +1788,11 @@ def read_curated(
     handoff for a base + increments chain). Schemas are aligned by
     name with missing columns as NULL, so a split-stamped increment
     unions cleanly over a splitless base."""
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    if run_id is None:
-        run_id = snap.get("latest_run", snap["runs"][-1])
-    elif run_id not in snap["runs"]:
-        raise FileNotFoundError(
-            f"run_id {run_id!r} is not committed in {out_dir} "
-            f"(committed: {snap['runs']})"
-        )
-    if not cumulative:
-        return spark.read.parquet(_survivors_path(out_dir, run_id))
-    out = None
-    for rid in _run_chain(snap, run_id):
-        df = spark.read.parquet(_survivors_path(out_dir, rid))
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True
-        )
-    return out
+    _, chain = _committed_chain(out_dir, run_id)
+    return _union_runs(
+        chain if cumulative else chain[:1],
+        lambda rid: spark.read.parquet(_run_path(out_dir, rid, "survivors")),
+    )
 
 
 def compact_curation(
@@ -1825,9 +1840,7 @@ def compact_curation(
     preserved exactly and bin_ids stay contiguous per key. The offset
     table is runs x languages x splits — metadata-sized, broadcast.
     """
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
+    snap, chain = _committed_chain(out_dir)
     live = _live_inflight_runs(out_dir)
     if live:
         raise RuntimeError(
@@ -1836,26 +1849,21 @@ def compact_curation(
             "wait for them or remove the stale INFLIGHT-* sentinel "
             "if you are sure"
         )
-    head = snap.get("latest_run", snap["runs"][-1])
-    chain = _run_chain(snap, head)
     # replay guard BEFORE the chain-of-one no-op: an explicitly passed
     # committed/vacuumed run_id is a caller error and must fail loudly
     # even when there is nothing to compact
     run_id = run_id or "compact-" + uuid.uuid4().hex[:12]
-    replay_guard = set(snap["runs"]) | set(snap.get("vacuumed_runs", []))
-    if run_id in replay_guard:
+    if _replayed(snap, run_id):
         raise ValueError(
             f"run_id {run_id!r} is already committed (or was vacuumed) "
             f"in {out_dir}; compacted runs need a fresh run_id"
         )
     if len(chain) == 1:
-        return {"run_id": head, "snapshot": snap, "skipped_noop": True}
+        return {"run_id": chain[0], "snapshot": snap, "skipped_noop": True}
 
     oldest_first = list(reversed(chain))
     packed_frames = {
-        rid: spark.read.parquet(
-            os.path.join(out_dir, "curated", f"run_id={rid}", "packed")
-        )
+        rid: spark.read.parquet(_run_path(out_dir, rid, "packed"))
         for rid in oldest_first
     }
     stamped = ["split" in df.columns for df in packed_frames.values()]
@@ -1870,26 +1878,18 @@ def compact_curation(
         )
     key = ["lang", "split"] if all(stamped) else ["lang"]
 
-    run_dir = os.path.join(out_dir, "curated", f"run_id={run_id}")
+    run_dir = _run_path(out_dir, run_id)
     survivors_path = os.path.join(run_dir, "survivors")
     packed_path = os.path.join(run_dir, "packed")
     lineage_path = os.path.join(out_dir, "lineage", f"run_id={run_id}")
-    ck = _ckpt(out_dir)
-    sentinel = _inflight_path(out_dir, run_id)
-    with open(sentinel, "w") as f:
-        # pid + kernel start time: recycling-proof liveness identity
-        _st = _pid_start(os.getpid())
-        f.write(f"{os.getpid()}:{_st}" if _st is not None
-                else str(os.getpid()))
-    try:
+    with _inflight(out_dir, run_id):
         # survivors: the cumulative corpus, one directory
-        surv = None
-        for rid in oldest_first:
-            df = spark.read.parquet(_survivors_path(out_dir, rid))
-            surv = df if surv is None else surv.unionByName(
-                df, allowMissingColumns=True
-            )
-        surv.write.mode("overwrite").parquet(survivors_path)
+        _union_runs(
+            oldest_first,
+            lambda rid: spark.read.parquet(
+                _run_path(out_dir, rid, "survivors")
+            ),
+        ).write.mode("overwrite").parquet(survivors_path)
         survivors = spark.read.parquet(survivors_path)
         n_survivors = survivors.count()
 
@@ -1907,10 +1907,10 @@ def compact_curation(
                 k = tuple(r[c] for c in key)
                 off_rows.append((rid, *k, next_off.get(k, 0)))
                 next_off[k] = next_off.get(k, 0) + int(r["_mx"]) + 1
-        allp = None
-        for rid in oldest_first:
-            f_ = packed_frames[rid].withColumn("_src", F.lit(rid))
-            allp = f_ if allp is None else allp.unionByName(f_)
+        allp = _union_runs(
+            oldest_first,
+            lambda rid: packed_frames[rid].withColumn("_src", F.lit(rid)),
+        )
         off_schema = "_src string, " + ", ".join(
             f"{c} string" for c in key
         ) + ", _off long"
@@ -1923,36 +1923,14 @@ def compact_curation(
             )
             .drop("_src", "_off")
         )
-        writer = packed.write.mode("overwrite")
-        # same empty-write rule as run_curation: a zero-row
-        # partitionBy leaves no schema file
-        if all(stamped) and n_survivors > 0:
-            writer = writer.partitionBy("split")
-        writer.parquet(packed_path)
-        packed_back = spark.read.schema(packed.schema).parquet(packed_path)
-        n_chunks = packed_back.count()
-        n_bins = packed_back.select(*key, "bin_id").distinct().count()
+        n_chunks, n_bins = _write_packed(
+            spark, packed, packed_path, key, n_survivors
+        )
 
         # processed manifest: everything the chain ever evaluated
-        # (survivor-url fallback for runs committed before the
-        # manifest existed — same rule as the increment path)
-        parts = []
-        for rid in chain:
-            p = os.path.join(
-                out_dir, "curated", f"run_id={rid}", "processed"
-            )
-            parts.append(
-                spark.read.parquet(p) if os.path.isdir(p)
-                else spark.read.parquet(
-                    _survivors_path(out_dir, rid)
-                ).select("url")
-            )
-        processed = parts[0]
-        for p in parts[1:]:
-            processed = processed.unionByName(p)
-        processed.distinct().write.mode("overwrite").parquet(
-            os.path.join(run_dir, "processed")
-        )
+        _chain_processed(spark, out_dir, chain).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(run_dir, "processed"))
 
         # increment-serving manifests: stored artifacts where present
         # and algorithm-compatible (no corpus re-minhash), recomputed
@@ -1970,32 +1948,14 @@ def compact_curation(
         # lineage: one row — compaction drops nothing by construction
         spark.createDataFrame(
             [(run_id, 0, "compact", n_survivors, n_survivors, 0)],
-            "run_id string, stage_idx int, stage string, n_in long, "
-            "n_out long, n_dropped long",
+            _LINEAGE_SCHEMA,
         ).write.mode("overwrite").parquet(lineage_path)
 
-        n = snap["n"] + 1
-        new_snap = {
-            "n": n,
-            "runs": sorted(set(snap["runs"]) | {run_id}),
-            "input_fingerprint": snap.get("input_fingerprint"),
-            "latest_run": run_id,
-            # a compacted run IS a base: no parent, chain of one —
-            # vacuum's ancestor closure then retains nothing extra
-            "run_parents": {
-                **snap.get("run_parents", {}), run_id: None,
-            },
-        }
-        if snap.get("vacuumed_runs"):
-            new_snap["vacuumed_runs"] = snap["vacuumed_runs"]
-        name = f"snapshot-{n}.json"
-        _atomic_write(os.path.join(ck, name), json.dumps(new_snap))
-        _atomic_write(os.path.join(ck, "LATEST"), name)
-    finally:
-        try:
-            os.remove(sentinel)
-        except OSError:
-            pass
+        # a compacted run IS a base: no parent, chain of one — vacuum's
+        # ancestor closure then retains nothing extra
+        new_snap = _publish_run(
+            out_dir, snap, run_id, None, snap.get("input_fingerprint")
+        )
 
     return {
         "run_id": run_id,
@@ -2008,31 +1968,6 @@ def compact_curation(
         "packed_path": packed_path,
         "lineage_path": lineage_path,
     }
-
-
-def _chain_url_hashes(
-    spark: SparkSession, out_dir: str, chain: list[str]
-) -> DataFrame:
-    """(url, content_hash) of every committed survivor in the chain:
-    stored per-run hash manifests where present, recomputed from
-    survivor text otherwise (the keyed twin of `_chain_hashes`, which
-    serves the increment anti-join and needs no url)."""
-    parts = []
-    for rid in chain:
-        p = os.path.join(out_dir, "curated", f"run_id={rid}", "hashes")
-        parts.append(
-            spark.read.parquet(p) if os.path.isdir(p)
-            else spark.read.parquet(
-                _survivors_path(out_dir, rid)
-            ).select(
-                "url",
-                F.md5(F.col("text").cast("binary")).alias("content_hash"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def dedup_invariant_violations(
@@ -2098,11 +2033,7 @@ def audit_curation_chain(spark: SparkSession, out_dir: str) -> DataFrame:
     under an older algorithm that collide under today's surface here
     — the signal that the corpus needs a full re-curate even though
     every individual run committed cleanly."""
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    head = snap.get("latest_run", snap["runs"][-1])
-    chain = _run_chain(snap, head)
+    _, chain = _committed_chain(out_dir)
     return dedup_invariant_violations(
         _chain_url_hashes(spark, out_dir, chain),
         _chain_bands(spark, out_dir, chain),

@@ -12,16 +12,35 @@ retries are impossible (exactly-once output).
 
 Layout (plain parquet standing in for Iceberg — no Iceberg runtime jar
 in this container; the snapshot JSON mirrors Iceberg's
-snapshot->manifest-list indirection and a real catalog slots in here):
+snapshot->manifest-list indirection and a real catalog slots in here).
+Extraction (``run_pipeline``) and curation (``curation.run_curation``)
+share ONE snapshot log: both commit through ``publish_snapshot`` and
+read through ``load_snapshot``, each in its own out_dir:
 
     out_dir/
-      extracted/run_id=<rid>/*.parquet   data files, partitioned by run
-      lineage/run_id=<rid>/*.parquet     per-partition metrics
+      extracted/run_id=<rid>/*.parquet   extraction data files, per run
+      curated/run_id=<rid>/              curation run: survivors, packed,
+                                         processed (evaluated urls),
+                                         hashes, bands, _band_meta.json
+      lineage/run_id=<rid>/*.parquet     per-partition / per-stage counts
       manifest/*.parquet                 final url->count summary
       _checkpoint/
-        processed/<rid>.parquet          (url, text_sha256) per run
-        snapshot-<n>.json                {"runs": [...], "n": n}
-        LATEST                           name of current snapshot (atomic rename)
+        processed/<rid>.parquet          (url, text_sha256) per extraction run
+        snapshot-<n>.json                {"n": n, "runs": [...]}; curation
+                                         adds input_fingerprint, latest_run,
+                                         run_parents {run: parent or null},
+                                         vacuumed_runs (once any vacuum
+                                         ran) and, on a vacuum's own
+                                         snapshot, removed_paths
+        LATEST                           name of the current snapshot; its
+                                         atomic rename is the commit point
+        INFLIGHT-<rid>                   "pid:start" of a live curation run
+                                         or compaction (removed on every
+                                         exit; vacuum/compact refuse to run
+                                         while a live one exists)
+
+A snapshot file newer than LATEST is crash residue (written, never
+published): no reader ever sees it.
 """
 
 from __future__ import annotations
@@ -58,14 +77,43 @@ def _atomic_write(path: str, content: str) -> None:
         os.close(dfd)
 
 
-def load_snapshot(out_dir: str) -> dict | None:
-    latest = os.path.join(_ckpt(out_dir), "LATEST")
+def load_snapshot(out_dir: str, n: int | None = None) -> dict | None:
+    """The snapshot LATEST names (None before the first commit), or
+    with ``n`` the committed snapshot-n — FileNotFoundError when ``n``
+    is past LATEST's (an unpublished snapshot is not committed)."""
+    ck = _ckpt(out_dir)
+    latest = os.path.join(ck, "LATEST")
     if not os.path.exists(latest):
-        return None
+        if n is None:
+            return None
+        raise FileNotFoundError(f"no committed snapshot under {out_dir}")
     with open(latest) as f:
         name = f.read().strip()
-    with open(os.path.join(_ckpt(out_dir), name)) as f:
+    if n is not None:
+        head = int(name.removeprefix("snapshot-").removesuffix(".json"))
+        if n > head:
+            raise FileNotFoundError(
+                f"snapshot {n} is not committed under {out_dir} "
+                f"(LATEST is {name})"
+            )
+        name = _snapshot_name(n)
+    with open(os.path.join(ck, name)) as f:
         return json.load(f)
+
+
+def publish_snapshot(out_dir: str, snap: dict) -> dict:
+    """Write snapshot-<snap["n"]>.json, then flip LATEST to it — the
+    atomic commit point of every extraction and curation run."""
+    ck = _ckpt(out_dir)
+    os.makedirs(ck, exist_ok=True)
+    name = _snapshot_name(snap["n"])
+    _atomic_write(os.path.join(ck, name), json.dumps(snap))
+    _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic commit point
+    return snap
+
+
+def _snapshot_name(n: int) -> str:
+    return f"snapshot-{n}.json"
 
 
 def all_committed_run_ids(out_dir: str) -> set[str]:
@@ -86,19 +134,17 @@ def all_committed_run_ids(out_dir: str) -> set[str]:
     latest = load_snapshot(out_dir)
     if latest is None:
         return set()
-    ck = _ckpt(out_dir)
     runs: set[str] = set()
     for n in range(latest["n"] + 1):
-        path = os.path.join(ck, f"snapshot-{n}.json")
         try:
-            with open(path) as f:
-                runs.update(json.load(f).get("runs", []))
+            runs.update(load_snapshot(out_dir, n).get("runs", []))
         except (FileNotFoundError, json.JSONDecodeError) as e:
             # fail LOUD: snapshots at or below LATEST are committed and
             # written fsync+atomically, so a missing/torn one means the
             # checkpoint store is corrupt — silently skipping it would
             # let a replay overwrite data files that time travel still
             # reads (the exact clobber this guard exists to prevent)
+            path = os.path.join(_ckpt(out_dir), _snapshot_name(n))
             raise RuntimeError(
                 f"corrupt checkpoint: committed {path} is unreadable; "
                 "repair the _checkpoint dir before writing new runs"
@@ -113,11 +159,32 @@ def processed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
     snap = load_snapshot(out_dir)
     if not snap or not snap["runs"]:
         return None
-    paths = [
-        os.path.join(_ckpt(out_dir), "processed", f"{rid}.parquet")
-        for rid in snap["runs"]
-    ]
-    return spark.read.parquet(*paths)
+    return spark.read.parquet(
+        *[_processed_path(out_dir, r) for r in snap["runs"]]
+    )
+
+
+def _processed_path(out_dir: str, run_id: str) -> str:
+    return os.path.join(_ckpt(out_dir), "processed", f"{run_id}.parquet")
+
+
+def _write_processed(run_df: DataFrame, out_dir: str, run_id: str) -> None:
+    """The run's (url, text_sha256) manifest — what resume anti-joins."""
+    (
+        run_df
+        .select("url", F.sha2(F.col("text"), 256).alias("text_sha256"))
+        .write.mode("overwrite")
+        .parquet(_processed_path(out_dir, run_id))
+    )
+
+
+def read_runs(spark: SparkSession, out_dir: str, runs: list[str]) -> DataFrame:
+    """The extracted rows of ``runs``, with their ``run_id`` partition
+    column."""
+    base = os.path.join(out_dir, "extracted")
+    return spark.read.option("basePath", base).parquet(
+        *[os.path.join(base, f"run_id={r}") for r in runs]
+    )
 
 
 def commit_run(
@@ -131,26 +198,15 @@ def commit_run(
     writer assumed (documented; a real catalog provides CAS here).
     Pass ``run_df`` (a cached read of the run dir) to avoid a second
     scan of the just-written files."""
-    ck = _ckpt(out_dir)
-    os.makedirs(os.path.join(ck, "processed"), exist_ok=True)
-    run_data = os.path.join(out_dir, "extracted", f"run_id={run_id}")
-    proc_path = os.path.join(ck, "processed", f"{run_id}.parquet")
     if run_df is None:
-        run_df = spark.read.parquet(run_data)
-    (
-        run_df
-        .select("url", F.sha2(F.col("text"), 256).alias("text_sha256"))
-        .write.mode("overwrite")
-        .parquet(proc_path)
-    )
+        run_df = spark.read.parquet(
+            os.path.join(out_dir, "extracted", f"run_id={run_id}")
+        )
+    _write_processed(run_df, out_dir, run_id)
     prev = load_snapshot(out_dir)
     n = (prev["n"] + 1) if prev else 0
     runs = (prev["runs"] if prev else []) + [run_id]
-    snap = {"n": n, "runs": runs}
-    name = f"snapshot-{n}.json"
-    _atomic_write(os.path.join(ck, name), json.dumps(snap))
-    _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic commit point
-    return snap
+    return publish_snapshot(out_dir, {"n": n, "runs": runs})
 
 
 def pending(
@@ -204,28 +260,12 @@ def compact(
     snap = load_snapshot(out_dir)
     if not snap or not snap["runs"]:
         raise FileNotFoundError(f"nothing to compact under {out_dir}")
-    base = os.path.join(out_dir, "extracted")
-    all_runs = spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, f"run_id={r}") for r in snap["runs"]]
-    ).drop("run_id")
+    all_runs = read_runs(spark, out_dir, snap["runs"]).drop("run_id")
     n = snap["n"] + 1
     new_run = f"compacted-{n}"
-    dest = os.path.join(base, f"run_id={new_run}")
+    dest = os.path.join(out_dir, "extracted", f"run_id={new_run}")
     if target_partitions:
         all_runs = all_runs.coalesce(target_partitions)
     all_runs.write.mode("overwrite").parquet(dest)
-
-    ck = _ckpt(out_dir)
-    os.makedirs(os.path.join(ck, "processed"), exist_ok=True)
-    proc_path = os.path.join(ck, "processed", f"{new_run}.parquet")
-    (
-        spark.read.parquet(dest)
-        .select("url", F.sha2(F.col("text"), 256).alias("text_sha256"))
-        .write.mode("overwrite")
-        .parquet(proc_path)
-    )
-    new_snap = {"n": n, "runs": [new_run]}
-    name = f"snapshot-{n}.json"
-    _atomic_write(os.path.join(ck, name), json.dumps(new_snap))
-    _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic flip
-    return new_snap
+    _write_processed(spark.read.parquet(dest), out_dir, new_run)
+    return publish_snapshot(out_dir, {"n": n, "runs": [new_run]})

@@ -36,6 +36,7 @@ from .operators.resume import (
     load_snapshot,
     pending,
     processed_urls,
+    read_runs,
 )
 
 
@@ -131,13 +132,9 @@ def run_pipeline(
     # O7/O10: manifest over the FULL input vs ALL committed runs.
     manifest_path = None
     if write_manifest:
-        all_extracted = spark.read.option("basePath", extracted_dir).parquet(
-            *[
-                os.path.join(extracted_dir, f"run_id={r}")
-                for r in snap["runs"]
-            ]
+        manifest_df = build_manifest(
+            pages, read_runs(spark, out_dir, snap["runs"])
         )
-        manifest_df = build_manifest(pages, all_extracted)
         manifest_path = os.path.join(out_dir, "manifest")
         manifest_df.write.mode("overwrite").parquet(manifest_path)
 
@@ -159,20 +156,9 @@ def read_extracted(
 
     ``snapshot=n`` time-travels to an earlier commit: the read sees
     exactly the runs listed by snapshot-n.json (snapshots are
-    immutable; the data files they reference are never rewritten)."""
-    import json as _json
-
-    from .operators.resume import load_snapshot
-
-    if snapshot is None:
-        snap = load_snapshot(out_dir)
-    else:
-        path = os.path.join(out_dir, "_checkpoint", f"snapshot-{snapshot}.json")
-        with open(path) as f:
-            snap = _json.load(f)
+    immutable; the data files they reference are never rewritten). A
+    snapshot past LATEST never committed: FileNotFoundError."""
+    snap = load_snapshot(out_dir, snapshot)
     if not snap or not snap["runs"]:
         raise FileNotFoundError(f"no committed snapshot under {out_dir}")
-    base = os.path.join(out_dir, "extracted")
-    return spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, f"run_id={r}") for r in snap["runs"]]
-    )
+    return read_runs(spark, out_dir, snap["runs"])

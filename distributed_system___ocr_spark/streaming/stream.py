@@ -385,15 +385,14 @@ def curate_foreach_batch(
     stage knobs are rejected HERE (fail fast) rather than on batch 2
     inside the stream."""
     from ..curation import (
+        CORPUS_GLOBAL_STAGES,
+        _replayed,
         load_curation_snapshot,
         run_curation,
         run_curation_increment,
     )
 
-    for k in (
-        "remove_spans_min_docs", "segment_dedup_n", "semdedup_tau",
-        "lm_quality_drop_z", "cluster_alpha", "sample_alpha",
-    ):
+    for k in CORPUS_GLOBAL_STAGES:
         if curation_kwargs.get(k) is not None:
             raise ValueError(
                 f"{k} is a corpus-global stage — its statistics are "
@@ -406,10 +405,7 @@ def curate_foreach_batch(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         rid = f"{run_prefix}-{epoch_id}"
         snap = load_curation_snapshot(out_dir)
-        if snap and (
-            rid in snap.get("runs", [])
-            or rid in snap.get("vacuumed_runs", [])
-        ):
+        if _replayed(snap, rid):
             results.append({"run_id": rid, "skipped_replay": True})
             return
         if snap is None:

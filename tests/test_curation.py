@@ -241,8 +241,13 @@ def test_curation_crash_before_commit_leaves_no_snapshot(
     after the data writes but BEFORE the atomic snapshot commit must
     leave the output uncommitted — read_curated refuses, a rerun with
     a fresh run_id re-curates cleanly, and no partially-written state
-    is mistaken for a result."""
+    is mistaken for a result. A crash between snapshot-0.json and the
+    LATEST flip leaves an unpublished snapshot: still uncommitted, and
+    a retry of the same run_id commits."""
+    import os
+
     import distributed_system___ocr_spark.curation as cur
+    import distributed_system___ocr_spark.operators.resume as resume
 
     out = str(tmp_path / "cur")
     docs = _docs(spark, n=8)
@@ -259,6 +264,19 @@ def test_curation_crash_before_commit_leaves_no_snapshot(
         read_curated(spark, out)
 
     monkeypatch.setattr(cur, "_atomic_write", real_atomic)
+    real_publish_write = resume._atomic_write
+    def crash_at_flip(path, payload):
+        if os.path.basename(path) == "LATEST":
+            raise RuntimeError("simulated crash at the LATEST flip")
+        real_publish_write(path, payload)
+
+    monkeypatch.setattr(resume, "_atomic_write", crash_at_flip)
+    with pytest.raises(RuntimeError, match="LATEST flip"):
+        run_curation(spark, docs, out, run_id="c2")
+    assert os.path.exists(os.path.join(out, "_checkpoint", "snapshot-0.json"))
+    assert load_curation_snapshot(out) is None
+
+    monkeypatch.setattr(resume, "_atomic_write", real_publish_write)
     info = run_curation(spark, docs, out, run_id="c2")
     assert load_curation_snapshot(out)["latest_run"] == "c2"
     assert info["n_survivors"] > 0

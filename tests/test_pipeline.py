@@ -134,8 +134,11 @@ def test_crashed_snapshot_does_not_block_retry(spark, pages, tmp_path):
     """A crash AFTER snapshot-N.json is written but BEFORE the LATEST
     flip leaves an unpublished snapshot naming the run. That run never
     committed, so retrying its run_id must succeed (the replay guard
-    only honors snapshots at or below LATEST)."""
+    only honors snapshots at or below LATEST), and time travel to it
+    must refuse it like any other uncommitted snapshot."""
     import json
+
+    import pytest
 
     out = str(tmp_path / "out")
     run_pipeline(spark, pages.limit(50), out, run_id="r1", num_partitions=4)
@@ -144,6 +147,8 @@ def test_crashed_snapshot_does_not_block_retry(spark, pages, tmp_path):
     ck = os.path.join(out, "_checkpoint")
     with open(os.path.join(ck, "snapshot-1.json"), "w") as f:
         json.dump({"n": 1, "runs": ["r1", "r-crashed"]}, f)
+    with pytest.raises(FileNotFoundError):
+        read_extracted(spark, out, snapshot=1)
     info = run_pipeline(
         spark, pages.limit(50), out, run_id="r-crashed", num_partitions=4
     )
